@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 
 def symmetrize(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -67,7 +68,9 @@ def pagerank(
     """
     # Every iteration re-reads the edge list and node set; without a persist
     # the whole upstream pipeline (source scan, symmetrize distincts) would
-    # re-execute once per iteration.
+    # re-execute once per iteration. A cache the caller already holds on
+    # the same plan is theirs: it is used here and left in place.
+    callers_cache = edges.storageLevel != StorageLevel.NONE
     edges = edges.persist()
     nodes = (
         edges.select(F.col("src").alias("node"))
@@ -123,7 +126,8 @@ def pagerank(
         ranks = ranks.localCheckpoint()
     out.unpersist()
     nodes.unpersist()
-    edges.unpersist()
+    if not callers_cache:
+        edges.unpersist()
     return ranks
 
 

@@ -32,8 +32,9 @@ RUNTIME_CONFS: dict[str, str] = {
     # ANSI off: reference semantics are permissive (no overflow errors) and
     # the DuckDB oracle comparison uses plain floating/long arithmetic.
     "spark.sql.ansi.enabled": "false",
-    # events.parquet stores ts as timestamp[ns], which Spark's reader rejects;
-    # read it as a long and convert in sources.tables.load_table.
+    # The fixtures store events.ts as timestamp[us]; a timestamp[ns] file,
+    # which Spark's reader rejects, reads as a long instead and is converted
+    # in sources.tables.load_table.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Constraint propagation OFF: this Spark build's Union.rewriteConstraints
     # intermittently throws `NoSuchElementException: key not found: <attr>`

@@ -38,6 +38,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rtcdb_spark.sources.tables import parquet_schema
+
 Interval = tuple[object, object]  # (lo, hi), either side may be None
 
 
@@ -117,7 +119,7 @@ def pruned_scan(
     optimization, never a correctness dependency.
     """
     index_path = index_path or index_path_for(data_path)
-    schema = spark.read.parquet(data_path).schema
+    schema = parquet_schema(spark, data_path)
     if os.path.isdir(index_path):
         files, _ = select_files(spark, index_path, intervals)
         if not files:

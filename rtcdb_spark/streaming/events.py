@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from rtcdb_spark.deterministic import dsum
 from rtcdb_spark.session import tune
+from rtcdb_spark.sources.tables import parquet_schema
 
 _MEMSINK_IDS = itertools.count()
 
@@ -76,14 +77,14 @@ def read_table_stream(
     """readStream over any fixture table's parquet.
 
     The file source requires an explicit schema; we take it from the batch
-    footer (one cheap metadata read). ``path`` overrides the default
+    footer (``sources.tables.parquet_schema``, inferred once per file
+    version). ``path`` overrides the default
     ``<sf_dir>/<table>.parquet`` — tests point it at a directory of
     pre-split files to exercise multi-batch arrival.
     """
     tune(spark)
     src = path or os.path.join(sf_dir, f"{table}.parquet")
-    schema = spark.read.parquet(src).schema
-    reader = spark.readStream.schema(schema)
+    reader = spark.readStream.schema(parquet_schema(spark, src))
     if os.path.isfile(src):
         # The file source needs a directory; select just this file via glob.
         reader = reader.option("pathGlobFilter", os.path.basename(src))

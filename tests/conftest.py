@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 import pytest
 
@@ -37,12 +38,35 @@ def pytest_collection_modifyitems(config, items):
     module the driver re-checks itself. Run them with `pytest -m slow`.
     Matching is on the tests/-relative nodeid so invocation directory
     doesn't matter.
+
+    A slow mark whose test is gone (renamed or deleted) fails the run with a
+    UsageError: otherwise the renamed test would silently join the fast
+    gate. The check covers every module collected whole, i.e. not narrowed
+    to single tests by a ``file.py::name`` argument.
     """
     from tests.slow_marks import SLOW_MODULES, SLOW_NODEIDS
 
+    collected = set()
     for item in items:
         rel = item.nodeid.replace("\\", "/")
         if rel.startswith("tests/"):
             rel = rel[len("tests/") :]
+        collected.add(rel)
         if rel in SLOW_NODEIDS or rel.split("::", 1)[0] in SLOW_MODULES:
             item.add_marker(pytest.mark.slow)
+    here = Path(__file__).parent.resolve()
+    narrowed = set()
+    for arg in config.args:
+        if "::" in arg:
+            path = Path(config.invocation_params.dir, arg.split("::", 1)[0]).resolve()
+            if path.is_relative_to(here):
+                narrowed.add(path.relative_to(here).as_posix())
+    modules = {rel.split("::", 1)[0] for rel in collected} - narrowed
+    stale = sorted(
+        n for n in SLOW_NODEIDS if n.split("::", 1)[0] in modules and n not in collected
+    )
+    if stale:
+        raise pytest.UsageError(
+            "tests/slow_marks.py marks tests that were not collected "
+            "(renamed or removed?): " + ", ".join(stale)
+        )

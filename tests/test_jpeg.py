@@ -197,6 +197,32 @@ def test_decode_image_dispatch_routes_jpeg():
         decode_image(b"\x00\x01unknown-format")
 
 
+def test_cached_tables_are_read_only():
+    from rtcdb_spark.functions.jpeg import (
+        _AC_LUMA_BITS,
+        _AC_LUMA_VALS,
+        _QUANT_LUMA,
+        _build_codes,
+        _dct_matrix,
+        _decode_table,
+        _scaled_quant,
+        _zz64,
+    )
+
+    for arr in (_zz64(), _dct_matrix(), _scaled_quant(_QUANT_LUMA, 75)):
+        with pytest.raises(ValueError):
+            arr[0] = 1
+    codes = _build_codes(_AC_LUMA_BITS, _AC_LUMA_VALS)
+    with pytest.raises(TypeError):
+        codes[0] = (0, 1)
+    decode = _decode_table(tuple(_AC_LUMA_BITS), tuple(_AC_LUMA_VALS))
+    with pytest.raises(TypeError):
+        decode[(1, 0)] = 0
+    # the caches still hand back the same (unchanged) objects
+    assert _zz64() is _zz64() and _zz64()[1] == 1
+    assert _build_codes(_AC_LUMA_BITS, _AC_LUMA_VALS) is codes
+
+
 def test_quality_monotonic_size():
     """Higher quality → finer quantizer → larger entropy-coded payload on
     non-trivial content (sanity that the IJG scaling is wired in)."""

@@ -1058,3 +1058,22 @@ def test_sort_within_partitions_violation_detector_fires(spark):
         spark, "/root/testdata/sf0.001"
     )
     assert out.agg(F.sum("n_order_violations")).collect()[0][0] == 0
+
+
+def test_pagerank_keeps_callers_cache(spark):
+    from pyspark.storagelevel import StorageLevel
+
+    from rtcdb_spark.functions.graph import pagerank
+
+    rows = [(1, 2), (2, 1), (2, 3), (3, 2)]
+    cached = spark.createDataFrame(rows, "src long, dst long").cache()
+    try:
+        pagerank(cached, n_iter=1).collect()
+        assert cached.is_cached
+        assert cached.storageLevel != StorageLevel.NONE
+    finally:
+        cached.unpersist()
+    # An input the caller did not cache is released again.
+    plain = spark.createDataFrame(rows, "src long, dst long")
+    pagerank(plain, n_iter=1).collect()
+    assert plain.storageLevel == StorageLevel.NONE

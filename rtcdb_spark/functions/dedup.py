@@ -30,6 +30,7 @@ from rtcdb_spark.functions.text import (
     shingles,
     stable_hash_mod,
 )
+from rtcdb_spark.partitioning import loop_width, shuffle_width, spread
 
 # Fixed random-affine permutation constants (seed=42, generated offline):
 # minhash_j(S) = min_{s in S} (A[j]*h(s) + B[j]) mod P. Hardcoded so every
@@ -57,67 +58,16 @@ def exact_dedup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "d
     )
 
 
-def fan_out_small(df: DataFrame) -> DataFrame:
-    """Round-robin-rebalance a DataFrame whose scan has fewer partitions
-    than the session's parallelism — the small-fixture / unsplittable-file
-    case (optimization guide §2.5: repartition immediately after an
-    un-parallel read) — so the heavy map stage that follows uses every
-    core instead of one task. No-op when the input is already at least
-    core-parallel, so at corpus scale (thousands of scan splits) this
-    never adds a shuffle.
-
-    Streaming DataFrames pass through untouched: their partitioning is the
-    source's per-micro-batch layout, and ``df.rdd`` (the partition-count
-    probe below) is illegal on a streaming plan. Note the probe's cost on
-    batch plans: ``df.rdd.getNumPartitions()`` forces physical planning of
-    ``df`` once — cheap for the scan-rooted inputs this guards, but not
-    free on very wide plans, so call it on the raw scan, not downstream."""
-    if df.isStreaming:
-        return df
-    n = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= n:
-        return df
-    return df.repartition(n)
-
-
-def fan_out_small_ordered(df: DataFrame, id_col: str) -> tuple[DataFrame, bool]:
-    """`fan_out_small` for map-only kernels whose output contract is
-    ORDER BY ``id_col``. A global sort ABOVE an expensive map runs the
-    range partitioner's sampling pass over the map's output — executing
-    the whole kernel TWICE per run (verified with an accumulator). When
-    the scan is narrower than the session's parallelism, RANGE-partition
-    the input on the id instead of round-robin: the sampling pass then
-    reads only the cheap input, each partition holds one contiguous id
-    range, and the caller finishes with a shuffle-free
-    ``sortWithinPartitions(id_col)`` for the same globally ordered rows
-    (partitions are collected in range order).
-
-    Returns ``(df, ordered)``: ``ordered=True`` → finish with
-    ``sortWithinPartitions``; ``False`` (input already core-parallel —
-    the corpus-scale case) → the input is untouched and the caller must
-    ``orderBy``. At that scale the honest choice is the plain global
-    sort: pre-shuffling the full text bytes to dodge the sampling pass
-    would move strictly more data than the duplicated kernel saves only
-    when the kernel is cheap, and a real pipeline materializes kernel
-    output once and sorts the stats table instead."""
-    if df.isStreaming:
-        return df, False
-    n = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= n:
-        return df, False
-    return df.repartitionByRange(n, id_col), True
-
-
 def doc_shingles(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3) -> DataFrame:
     """Distinct (id, shingle_hash) pairs — the set representation used by
     MinHash and Jaccard. Hashes are in [0, P).
 
     The shingle explode + md5 map stage is the expensive part; the input
     is rebalanced first when its scan is narrower than the session's
-    parallelism (`fan_out_small`) — before that, every consumer of this
-    function ran its whole hash stage on the fixture's single parquet
+    parallelism (`partitioning.spread`) — before that, every consumer of
+    this function ran its whole hash stage on the fixture's single parquet
     split."""
-    docs = fan_out_small(docs)
+    docs = spread(docs)
     return (
         docs.select(F.col(id_col), F.explode(shingles(text_col, n)).alias("shingle"))
         .select(id_col, stable_hash_mod("shingle").alias("sh"))
@@ -406,10 +356,10 @@ def simhash64_rowwise(
     """
     from rtcdb_spark.functions.simhash_np import simhash64_sig
 
-    if not docs.isStreaming:
-        # batch consumers read the single-split fixture: spread the kernel
-        # across cores (streaming partitioning is the source's business)
-        docs = fan_out_small(docs)
+    # batch consumers read the single-split fixture: spread the kernel
+    # across cores (a stream passes through; its partitioning is the
+    # source's business)
+    docs = spread(docs)
     carried = [F.col(c) for c in (extra_cols or [])]
     sigged = docs.select(
         F.col(id_col), *carried, simhash64_sig(F.col(text_col)).alias("_sig")
@@ -664,12 +614,10 @@ def connected_components_star(
     sig = signature(e)
     # Loop shuffles sized to the EDGE relation, not the session width: the
     # rounds' per-task floor dominates on contracted graphs (the signature
-    # action materializes each round inside the throttle, so the width
+    # action materializes each round inside the block, so the width
     # applies to the real execution). Width derives from the measured edge
-    # count — scale-adaptive, see session.iter_shuffle_throttle.
-    from rtcdb_spark.session import iter_shuffle_throttle
-
-    with iter_shuffle_throttle(edges.sparkSession, sig[0]):
+    # count — scale-adaptive, see partitioning.loop_width.
+    with shuffle_width(edges.sparkSession, loop_width(sig[0])):
         for _ in range(max_iter):
             e = small_star(large_star(e)).localCheckpoint(eager=False)
             new_sig = signature(e)

@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from rtcdb_spark.partitioning import loop_width, shuffle_width
+
 
 def symmetrize(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Undirected view of an edge list: both orientations, self-loops
@@ -117,12 +119,10 @@ def pagerank(
     # the edge relation instead of the session width (same-JVM A/B at
     # sf0.1: 3.54 s -> 1.76 s; the per-task floor of edge-sized joins at
     # full width dominated the tiny rounds). The eager localCheckpoint is
-    # the action that runs the loop inside the throttle; it also lets the
+    # the action that runs the loop inside the block; it also lets the
     # loop-invariant caches be RELEASED before returning — the round-12
     # persists outlived the query and late-suite rows paid their GC tax.
-    from rtcdb_spark.session import iter_shuffle_throttle
-
-    with iter_shuffle_throttle(edges.sparkSession, m):
+    with shuffle_width(edges.sparkSession, loop_width(m)):
         ranks = ranks.localCheckpoint()
     out.unpersist()
     nodes.unpersist()
@@ -220,11 +220,9 @@ def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
             ).alias("label")
         )
     # Run the unrolled rounds here with loop shuffles sized to the edge
-    # relation (scale-adaptive; see session.iter_shuffle_throttle) — the
-    # eager localCheckpoint is the action that executes them inside the
-    # throttle, and it truncates the n_iter-deep lineage the downstream
-    # aggregate would otherwise carry.
-    from rtcdb_spark.session import iter_shuffle_throttle
-
-    with iter_shuffle_throttle(edges.sparkSession, m):
+    # relation (scale-adaptive; see partitioning.loop_width) — the eager
+    # localCheckpoint is the action that executes them inside the block,
+    # and it truncates the n_iter-deep lineage the downstream aggregate
+    # would otherwise carry.
+    with shuffle_width(edges.sparkSession, loop_width(m)):
         return labels.localCheckpoint()

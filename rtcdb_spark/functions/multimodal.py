@@ -45,6 +45,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from rtcdb_spark.partitioning import map_ordered
+
 META_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -744,30 +746,6 @@ def attach_payload(df: DataFrame, text_col: str = "text", out: str = "payload") 
     return df.withColumn(out, F.encode(F.col(text_col), "UTF-8"))
 
 
-def _fan_out(df: DataFrame, id_col: str) -> DataFrame:
-    """Spread per-row Python codec work across all cores: the synth ops are
-    CPU-bound per row, and a coarse upstream layout (e.g. a one-row-group
-    parquet fixture -> ONE input partition) would serialize the whole
-    corpus onto a single task. Repartitioning the id column is an 8-byte/
-    row exchange — negligible data movement next to the codec compute it
-    parallelizes. On a real many-file corpus the exchange is still
-    correct: it rebalances skewed file sizes before the expensive map.
-
-    RANGE partitioning on the id (round 13), not round-robin: the codec
-    queries' output contract is ORDER BY id, and a global sort ABOVE the
-    codec map runs the range-partitioner's sampling pass over the map's
-    output — executing every per-row codec TWICE per run (measured with
-    an accumulator: 2N rows processed for N inputs). Range-partitioning
-    the 8-byte input instead puts the sampling pass on the scan, so each
-    partition holds one contiguous id range, the codec runs ONCE, and a
-    shuffle-free sortWithinPartitions on the map output yields the same
-    globally ordered result (partitions are collected in range order)."""
-    spark = df.sparkSession
-    return df.select(id_col).repartitionByRange(
-        spark.sparkContext.defaultParallelism, id_col
-    )
-
-
 def extract_payload_meta(df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload") -> DataFrame:
     """Deterministic 'feature extraction' over binary payloads via
     `mapInPandas`: byte length, 8-byte head as hex, adler-ish byte checksum.
@@ -818,7 +796,7 @@ def synth_payload(doc_id: int) -> bytes:
     return make_wav(_WAV_RATES[doc_id % 3], 50 + doc_id % 100, doc_id)
 
 
-def synth_and_decode(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_and_decode(df: DataFrame) -> DataFrame:
     """Synthesize a media payload per row, then run it through the REAL
     pure-Python decoders (`decode_image`/`decode_audio`) inside one
     Arrow-batched `mapInPandas` pass — the end-to-end codec round-trip.
@@ -830,7 +808,7 @@ def synth_and_decode(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: dict[str, list] = {f.name: [] for f in DECODED_SCHEMA.fields}
-            for doc_id in pdf[id_col].astype("int64"):
+            for doc_id in pdf["doc_id"].astype("int64"):
                 payload = synth_payload(int(doc_id))
                 if payload[:2] == b"BM":
                     m = decode_image(payload)
@@ -872,7 +850,9 @@ def synth_and_decode(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _fan_out(df, id_col).mapInPandas(process, DECODED_SCHEMA)
+    return map_ordered(
+        df.select("doc_id"), "doc_id", lambda d: d.mapInPandas(process, DECODED_SCHEMA)
+    )
 
 
 AUDIO_FEAT_SCHEMA = StructType(
@@ -912,7 +892,7 @@ def audio_features(payload: bytes) -> dict[str, float]:
     }
 
 
-def synth_and_audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_and_audio_features(df: DataFrame) -> DataFrame:
     """Synthesize the WAV payload for every audio row, then genuinely
     decode its PCM samples and extract features inside one Arrow-batched
     `mapInPandas` pass — the multimodal *feature-extract* stage (the step
@@ -926,14 +906,16 @@ def synth_and_audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: dict[str, list] = {f.name: [] for f in AUDIO_FEAT_SCHEMA.fields}
-            for doc_id in pdf[id_col].astype("int64"):
+            for doc_id in pdf["doc_id"].astype("int64"):
                 feats = audio_features(synth_payload(int(doc_id)))
                 rows["doc_id"].append(int(doc_id))
                 for k, v in feats.items():
                     rows[k].append(v)
             yield pd.DataFrame(rows)
 
-    return _fan_out(df, id_col).mapInPandas(process, AUDIO_FEAT_SCHEMA)
+    return map_ordered(
+        df.select("doc_id"), "doc_id", lambda d: d.mapInPandas(process, AUDIO_FEAT_SCHEMA)
+    )
 
 
 IMAGE_STATS_SCHEMA = StructType(
@@ -980,7 +962,7 @@ def image_stats(payload: bytes) -> dict[str, float]:
     }
 
 
-def synth_and_image_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_and_image_stats(df: DataFrame) -> DataFrame:
     """Pixel-level feature extraction over the image rows: synthesize each
     BMP payload, then genuinely walk its padded scanlines and average the
     BGR channels inside one Arrow-batched `mapInPandas` pass. Identical
@@ -990,14 +972,16 @@ def synth_and_image_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: dict[str, list] = {f.name: [] for f in IMAGE_STATS_SCHEMA.fields}
-            for doc_id in pdf[id_col].astype("int64"):
+            for doc_id in pdf["doc_id"].astype("int64"):
                 feats = image_stats(synth_payload(int(doc_id)))
                 rows["doc_id"].append(int(doc_id))
                 for k, v in feats.items():
                     rows[k].append(v)
             yield pd.DataFrame(rows)
 
-    return _fan_out(df, id_col).mapInPandas(process, IMAGE_STATS_SCHEMA)
+    return map_ordered(
+        df.select("doc_id"), "doc_id", lambda d: d.mapInPandas(process, IMAGE_STATS_SCHEMA)
+    )
 
 
 SILENCE_SCHEMA = StructType(
@@ -1034,7 +1018,7 @@ def silence_bounds(payload: bytes, threshold: int = 3277) -> dict[str, int]:
     }
 
 
-def synth_and_silence_bounds(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_and_silence_bounds(df: DataFrame) -> DataFrame:
     """Silence-trim bounds for every audio row via one Arrow-batched
     `mapInPandas` pass over genuinely decoded PCM — same production shape
     as the other media feature extractors."""
@@ -1042,14 +1026,16 @@ def synth_and_silence_bounds(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: dict[str, list] = {f.name: [] for f in SILENCE_SCHEMA.fields}
-            for doc_id in pdf[id_col].astype("int64"):
+            for doc_id in pdf["doc_id"].astype("int64"):
                 b = silence_bounds(synth_payload(int(doc_id)))
                 rows["doc_id"].append(int(doc_id))
                 for k, v in b.items():
                     rows[k].append(v)
             yield pd.DataFrame(rows)
 
-    return _fan_out(df, id_col).mapInPandas(process, SILENCE_SCHEMA)
+    return map_ordered(
+        df.select("doc_id"), "doc_id", lambda d: d.mapInPandas(process, SILENCE_SCHEMA)
+    )
 
 
 QUADRANT_SIG_SCHEMA = StructType(
@@ -1091,7 +1077,7 @@ def image_quadrant_sig(payload: bytes) -> int:
     return sig
 
 
-def synth_and_quadrant_sig(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_and_quadrant_sig(df: DataFrame) -> DataFrame:
     """Quadrant-aHash over the image rows: synthesize each BMP, decode the
     padded scanlines for real, emit the 4-bit signature — one Arrow-batched
     mapInPandas pass, embarrassingly parallel like every decode kernel."""
@@ -1099,12 +1085,14 @@ def synth_and_quadrant_sig(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, sigs = [], []
-            for doc_id in pdf[id_col].astype("int64"):
+            for doc_id in pdf["doc_id"].astype("int64"):
                 ids.append(int(doc_id))
                 sigs.append(image_quadrant_sig(synth_payload(int(doc_id))))
             yield pd.DataFrame({"doc_id": ids, "sig": sigs})
 
-    return _fan_out(df, id_col).mapInPandas(process, QUADRANT_SIG_SCHEMA)
+    return map_ordered(
+        df.select("doc_id"), "doc_id", lambda d: d.mapInPandas(process, QUADRANT_SIG_SCHEMA)
+    )
 
 
 PNG_DECODE_SCHEMA = StructType(
@@ -1119,7 +1107,7 @@ PNG_DECODE_SCHEMA = StructType(
 )
 
 
-def synth_and_png_decode(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_and_png_decode(df: DataFrame) -> DataFrame:
     """Synthesize a real compressed PNG per row (even ids → RGB, odd →
     RGBA; dimensions derived from the id; rotating per-row filter types),
     then fully decode it — chunk CRC walk, zlib inflate, ALL-filter
@@ -1133,7 +1121,7 @@ def synth_and_png_decode(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         for pdf in batches:
             out: dict[str, list] = {f.name: [] for f in PNG_DECODE_SCHEMA.fields}
-            for doc_id in pdf[id_col].astype("int64"):
+            for doc_id in pdf["doc_id"].astype("int64"):
                 i = int(doc_id)
                 w, h = 1 + i % 11, 1 + i % 5
                 ch = 3 if i % 2 == 0 else 4
@@ -1146,7 +1134,9 @@ def synth_and_png_decode(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 out["max_byte"].append(int(px.max()))
             yield pd.DataFrame({k: pd.array(v, dtype="Int64") for k, v in out.items()})
 
-    return _fan_out(df, id_col).mapInPandas(process, PNG_DECODE_SCHEMA)
+    return map_ordered(
+        df.select("doc_id"), "doc_id", lambda d: d.mapInPandas(process, PNG_DECODE_SCHEMA)
+    )
 
 
 JPEG_PROGRESSIVE_SCHEMA = StructType(
@@ -1161,7 +1151,7 @@ JPEG_PROGRESSIVE_SCHEMA = StructType(
 )
 
 
-def synth_and_jpeg_progressive(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_and_jpeg_progressive(df: DataFrame) -> DataFrame:
     """Round-5 progressive JPEG end-to-end: per row, encode the synthetic
     image BOTH ways — baseline sequential and progressive (T.81 Annex G
     scan script: DC first, per-component AC first, DC refinement, AC
@@ -1184,7 +1174,7 @@ def synth_and_jpeg_progressive(df: DataFrame, id_col: str = "doc_id") -> DataFra
             out: dict[str, list] = {
                 f.name: [] for f in JPEG_PROGRESSIVE_SCHEMA.fields
             }
-            for doc_id in pdf[id_col].astype("int64"):
+            for doc_id in pdf["doc_id"].astype("int64"):
                 i = int(doc_id)
                 w, h = 1 + i % 19, 1 + i % 11
                 gray = i % 2 == 1
@@ -1212,7 +1202,9 @@ def synth_and_jpeg_progressive(df: DataFrame, id_col: str = "doc_id") -> DataFra
                 }
             )
 
-    return _fan_out(df, id_col).mapInPandas(process, JPEG_PROGRESSIVE_SCHEMA)
+    return map_ordered(
+        df.select("doc_id"), "doc_id", lambda d: d.mapInPandas(process, JPEG_PROGRESSIVE_SCHEMA)
+    )
 
 
 JPEG_420_SCHEMA = StructType(
@@ -1227,7 +1219,7 @@ JPEG_420_SCHEMA = StructType(
 )
 
 
-def synth_and_jpeg_420_restart(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_and_jpeg_420_restart(df: DataFrame) -> DataFrame:
     """Round-5 4:2:0 + restart-marker JPEG end-to-end: per row, encode the
     synthetic RGB image with 2x2-subsampled chroma and a seed-derived
     restart interval, decode it (interleaved four-luma-block MCUs, RSTm
@@ -1248,7 +1240,7 @@ def synth_and_jpeg_420_restart(df: DataFrame, id_col: str = "doc_id") -> DataFra
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: dict[str, list] = {f.name: [] for f in JPEG_420_SCHEMA.fields}
-            for doc_id in pdf[id_col].astype("int64"):
+            for doc_id in pdf["doc_id"].astype("int64"):
                 i = int(doc_id)
                 w, h = 1 + i % 21, 1 + i % 13
                 quality = 85 + (i % 3) * 5
@@ -1282,7 +1274,9 @@ def synth_and_jpeg_420_restart(df: DataFrame, id_col: str = "doc_id") -> DataFra
                 }
             )
 
-    return _fan_out(df, id_col).mapInPandas(process, JPEG_420_SCHEMA)
+    return map_ordered(
+        df.select("doc_id"), "doc_id", lambda d: d.mapInPandas(process, JPEG_420_SCHEMA)
+    )
 
 
 JPEG_PROG_420_SCHEMA = StructType(
@@ -1297,9 +1291,7 @@ JPEG_PROG_420_SCHEMA = StructType(
 )
 
 
-def synth_and_jpeg_progressive_420(
-    df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synth_and_jpeg_progressive_420(df: DataFrame) -> DataFrame:
     """Round-6 PROGRESSIVE + 4:2:0 JPEG end-to-end (closes the r5 honest
     gate on the combination): per row, encode the synthetic RGB image as
     baseline 4:2:0 AND as progressive 4:2:0 (Annex-G scan script over the
@@ -1326,7 +1318,7 @@ def synth_and_jpeg_progressive_420(
             out: dict[str, list] = {
                 f.name: [] for f in JPEG_PROG_420_SCHEMA.fields
             }
-            for doc_id in pdf[id_col].astype("int64"):
+            for doc_id in pdf["doc_id"].astype("int64"):
                 i = int(doc_id)
                 w, h = 1 + i % 37, 1 + i % 29
                 quality = 80 + (i % 4) * 5
@@ -1355,7 +1347,9 @@ def synth_and_jpeg_progressive_420(
                 }
             )
 
-    return _fan_out(df, id_col).mapInPandas(process, JPEG_PROG_420_SCHEMA)
+    return map_ordered(
+        df.select("doc_id"), "doc_id", lambda d: d.mapInPandas(process, JPEG_PROG_420_SCHEMA)
+    )
 
 
 APNG_SCHEMA = StructType(
@@ -1370,7 +1364,7 @@ APNG_SCHEMA = StructType(
 )
 
 
-def synth_and_apng_animate(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_and_apng_animate(df: DataFrame) -> DataFrame:
     """Round-6 APNG end-to-end (closes the 'APNG animation out of scope'
     gate): per row, build a real animated PNG — full-canvas RGBA8 first
     frame in IDAT, seed-derived sub-rectangle frames in fdAT chunks with
@@ -1440,7 +1434,7 @@ def synth_and_apng_animate(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: dict[str, list] = {f.name: [] for f in APNG_SCHEMA.fields}
-            for doc_id in pdf[id_col].astype("int64"):
+            for doc_id in pdf["doc_id"].astype("int64"):
                 i = int(doc_id)
                 W, H, frames = _plan(i)
                 payload = make_apng(W, H, i, frames)
@@ -1477,7 +1471,9 @@ def synth_and_apng_animate(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _fan_out(df, id_col).mapInPandas(process, APNG_SCHEMA)
+    return map_ordered(
+        df.select("doc_id"), "doc_id", lambda d: d.mapInPandas(process, APNG_SCHEMA)
+    )
 
 
 PNG_LAYOUT_SCHEMA = StructType(
@@ -1491,7 +1487,7 @@ PNG_LAYOUT_SCHEMA = StructType(
 )
 
 
-def synth_and_png_layout_decode(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_and_png_layout_decode(df: DataFrame) -> DataFrame:
     """Round-5 full-spec-surface PNG decode: each document exercises one of
     five exotic layouts — 1-bit interlaced grayscale, 16-bit grayscale,
     4-bit paletted with tRNS alpha, 8-bit gray+alpha, and 16-bit RGBA
@@ -1510,7 +1506,7 @@ def synth_and_png_layout_decode(df: DataFrame, id_col: str = "doc_id") -> DataFr
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: dict[str, list] = {f.name: [] for f in PNG_LAYOUT_SCHEMA.fields}
-            for doc_id in pdf[id_col].astype("int64"):
+            for doc_id in pdf["doc_id"].astype("int64"):
                 i = int(doc_id)
                 m, w, h = i % 5, 1 + i % 13, 1 + i % 9
 
@@ -1557,7 +1553,9 @@ def synth_and_png_layout_decode(df: DataFrame, id_col: str = "doc_id") -> DataFr
                 {k: pd.array(v, dtype="Int64") for k, v in out.items()}
             )
 
-    return _fan_out(df, id_col).mapInPandas(process, PNG_LAYOUT_SCHEMA)
+    return map_ordered(
+        df.select("doc_id"), "doc_id", lambda d: d.mapInPandas(process, PNG_LAYOUT_SCHEMA)
+    )
 
 
 JPEG_ROUNDTRIP_SCHEMA = StructType(
@@ -1572,7 +1570,7 @@ JPEG_ROUNDTRIP_SCHEMA = StructType(
 )
 
 
-def synth_and_jpeg_roundtrip(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_and_jpeg_roundtrip(df: DataFrame) -> DataFrame:
     """Synthesize a real baseline JFIF per row (even ids → 4:4:4 RGB, odd →
     grayscale; dimensions and quality derived from the id), decode it with
     the pure-Python T.81 decoder, and compare the decoded pixels against
@@ -1593,7 +1591,7 @@ def synth_and_jpeg_roundtrip(df: DataFrame, id_col: str = "doc_id") -> DataFrame
             out: dict[str, list] = {
                 f.name: [] for f in JPEG_ROUNDTRIP_SCHEMA.fields
             }
-            for doc_id in pdf[id_col].astype("int64"):
+            for doc_id in pdf["doc_id"].astype("int64"):
                 i = int(doc_id)
                 w, h = 1 + i % 21, 1 + i % 13
                 gray = i % 2 == 1
@@ -1620,7 +1618,9 @@ def synth_and_jpeg_roundtrip(df: DataFrame, id_col: str = "doc_id") -> DataFrame
                 }
             )
 
-    return _fan_out(df, id_col).mapInPandas(process, JPEG_ROUNDTRIP_SCHEMA)
+    return map_ordered(
+        df.select("doc_id"), "doc_id", lambda d: d.mapInPandas(process, JPEG_ROUNDTRIP_SCHEMA)
+    )
 
 
 MP4_SAMPLE_SCHEMA = StructType(
@@ -1636,9 +1636,7 @@ MP4_SAMPLE_SCHEMA = StructType(
 )
 
 
-def synth_and_mp4_frame_sample(
-    df: DataFrame, id_col: str = "doc_id", every_n: int = 3
-) -> DataFrame:
+def synth_and_mp4_frame_sample(df: DataFrame, every_n: int = 3) -> DataFrame:
     """Synthesize a valid minimal MP4 per row (seed-derived frame count,
     sizes, and payload bytes), then run the real frame-sampling path —
     ftyp check, moov box walk, stsz/stsc/stco resolution to absolute
@@ -1654,7 +1652,7 @@ def synth_and_mp4_frame_sample(
             out: dict[str, list] = {
                 f.name: [] for f in MP4_SAMPLE_SCHEMA.fields
             }
-            for doc_id in pdf[id_col].astype("int64"):
+            for doc_id in pdf["doc_id"].astype("int64"):
                 i = int(doc_id)
                 n_frames = 5 + i % 20
                 payload = make_mp4(n_frames, seed=i)
@@ -1671,7 +1669,9 @@ def synth_and_mp4_frame_sample(
                 {k: pd.array(v, dtype="Int64") for k, v in out.items()}
             )
 
-    return _fan_out(df, id_col).mapInPandas(process, MP4_SAMPLE_SCHEMA)
+    return map_ordered(
+        df.select("doc_id"), "doc_id", lambda d: d.mapInPandas(process, MP4_SAMPLE_SCHEMA)
+    )
 
 
 def resize_box2(px):
@@ -1701,7 +1701,7 @@ RESIZE_SCHEMA = StructType(
 )
 
 
-def synth_resize_roundtrip(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_resize_roundtrip(df: DataFrame) -> DataFrame:
     """Decode → resize → re-encode → re-decode per document, Arrow-batched:
     every doc gets an even-dimensioned synthetic PNG, decoded with the real
     codec, box-downsampled 2×, re-encoded as PNG and decoded AGAIN — the
@@ -1714,7 +1714,7 @@ def synth_resize_roundtrip(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         for pdf in batches:
             out: dict[str, list] = {f.name: [] for f in RESIZE_SCHEMA.fields}
-            for doc_id in pdf[id_col].astype("int64"):
+            for doc_id in pdf["doc_id"].astype("int64"):
                 i = int(doc_id)
                 w, h = 2 * (1 + i % 6), 2 * (1 + i % 3)
                 ch = 3
@@ -1734,7 +1734,9 @@ def synth_resize_roundtrip(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 out["resized_pixel_sum"].append(int(small.astype(np.int64).sum()))
             yield pd.DataFrame({k: pd.array(v, dtype="Int64") for k, v in out.items()})
 
-    return _fan_out(df, id_col).mapInPandas(process, RESIZE_SCHEMA)
+    return map_ordered(
+        df.select("doc_id"), "doc_id", lambda d: d.mapInPandas(process, RESIZE_SCHEMA)
+    )
 
 
 def _png_from_pixels(px) -> bytes:
@@ -1778,7 +1780,7 @@ JPEG_ARITH_SCHEMA = StructType(
 )
 
 
-def synth_and_jpeg_arithmetic(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_and_jpeg_arithmetic(df: DataFrame) -> DataFrame:
     """Round-7 ARITHMETIC-coded JPEG end-to-end (closes the oldest media
     gate; `functions/jpeg_arith.py`, libjpeg-interop-tested in unit
     tests): per row, encode the synthetic image as huffman baseline AND
@@ -1801,7 +1803,7 @@ def synth_and_jpeg_arithmetic(df: DataFrame, id_col: str = "doc_id") -> DataFram
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: dict[str, list] = {f.name: [] for f in JPEG_ARITH_SCHEMA.fields}
-            for doc_id in pdf[id_col].astype("int64"):
+            for doc_id in pdf["doc_id"].astype("int64"):
                 i = int(doc_id)
                 w, h = 9 + i % 31, 9 + i % 23
                 quality = 75 + (i % 5) * 5
@@ -1836,7 +1838,9 @@ def synth_and_jpeg_arithmetic(df: DataFrame, id_col: str = "doc_id") -> DataFram
                 }
             )
 
-    return _fan_out(df, id_col).mapInPandas(process, JPEG_ARITH_SCHEMA)
+    return map_ordered(
+        df.select("doc_id"), "doc_id", lambda d: d.mapInPandas(process, JPEG_ARITH_SCHEMA)
+    )
 
 
 JPEG_LOSSLESS_SCHEMA = StructType(
@@ -1851,7 +1855,7 @@ JPEG_LOSSLESS_SCHEMA = StructType(
 )
 
 
-def synth_and_jpeg_lossless(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_and_jpeg_lossless(df: DataFrame) -> DataFrame:
     """Round-7 LOSSLESS JPEG end-to-end (T.81 Annex H / SOF3,
     `functions/jpeg_lossless.py` — the DICOM coding): per row, a
     deterministic 16-bit image (the depth/medical-sensor shape lossless
@@ -1871,7 +1875,7 @@ def synth_and_jpeg_lossless(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             out: dict[str, list] = {
                 f.name: [] for f in JPEG_LOSSLESS_SCHEMA.fields
             }
-            for doc_id in pdf[id_col].astype("int64"):
+            for doc_id in pdf["doc_id"].astype("int64"):
                 i = int(doc_id)
                 w, h = 5 + i % 23, 5 + i % 17
                 pred = 1 + i % 7
@@ -1902,7 +1906,9 @@ def synth_and_jpeg_lossless(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _fan_out(df, id_col).mapInPandas(process, JPEG_LOSSLESS_SCHEMA)
+    return map_ordered(
+        df.select("doc_id"), "doc_id", lambda d: d.mapInPandas(process, JPEG_LOSSLESS_SCHEMA)
+    )
 
 
 JPEG_HIERARCHICAL_SCHEMA = StructType(
@@ -1918,7 +1924,7 @@ JPEG_HIERARCHICAL_SCHEMA = StructType(
 )
 
 
-def synth_and_jpeg_hierarchical(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def synth_and_jpeg_hierarchical(df: DataFrame) -> DataFrame:
     """Round-8 HIERARCHICAL JPEG end-to-end (T.81 Annex J,
     `functions/jpeg_hierarchical.py` — the pyramid/progressive-resolution
     mode): per row, a deterministic smooth image encodes with the doc's
@@ -1940,7 +1946,7 @@ def synth_and_jpeg_hierarchical(df: DataFrame, id_col: str = "doc_id") -> DataFr
             out: dict[str, list] = {
                 f.name: [] for f in JPEG_HIERARCHICAL_SCHEMA.fields
             }
-            for doc_id in pdf[id_col].astype("int64"):
+            for doc_id in pdf["doc_id"].astype("int64"):
                 i = int(doc_id)
                 w, h = 24 + i % 29, 24 + i % 23
                 levels = 1 + i % 4
@@ -1976,4 +1982,6 @@ def synth_and_jpeg_hierarchical(df: DataFrame, id_col: str = "doc_id") -> DataFr
                 }
             )
 
-    return _fan_out(df, id_col).mapInPandas(process, JPEG_HIERARCHICAL_SCHEMA)
+    return map_ordered(
+        df.select("doc_id"), "doc_id", lambda d: d.mapInPandas(process, JPEG_HIERARCHICAL_SCHEMA)
+    )

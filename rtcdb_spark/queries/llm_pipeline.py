@@ -489,9 +489,9 @@ def text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rebalance the single-split fixture scan across cores first (no-op on
     # a many-split corpus; the bench side stays a structurally-filtered
     # scan so its doc_id pushdown is untouched)
-    from rtcdb_spark.functions.dedup import fan_out_small
+    from rtcdb_spark.partitioning import spread
 
-    train = fan_out_small(d.filter(F.col("doc_id") >= _BENCH_DOCS))
+    train = spread(d.filter(F.col("doc_id") >= _BENCH_DOCS))
     hit = _grams(train).join(
         F.broadcast(bench.withColumn("hit", F.lit(1))), "gram", "left"
     )

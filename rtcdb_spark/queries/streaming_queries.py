@@ -26,6 +26,7 @@ from rtcdb_spark.streaming import (
     stream_tumbling,
     stream_user_running_totals,
 )
+from rtcdb_spark.streaming.events import drain
 
 
 def _multiset_signature(df: DataFrame) -> tuple[int, int]:
@@ -1104,17 +1105,14 @@ def stream_delta_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     optimize_delta(spark, path)  # maintenance: the stream must skip it
 
     def _drain() -> None:
-        q = (
+        drain(
             spark.readStream.format("delta_stream")
             .option("path", path)
             .load()
             .writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
 
     _drain()
     n_first = spark.read.parquet(sink).count()
@@ -1197,7 +1195,7 @@ def stream_delta_cdf_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     append_delta(o.filter(F.col("o_orderkey") % 2 == 1), path)
 
     def _drain() -> None:
-        q = (
+        drain(
             spark.readStream.format("delta_stream")
             .option("path", path)
             .option("readChangeFeed", "true")
@@ -1205,10 +1203,7 @@ def stream_delta_cdf_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             .writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
 
     _drain()
     n_inserts = spark.read.parquet(sink).count()
@@ -1278,7 +1273,7 @@ def stream_delta_backfill_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_delta(head.repartition(4), path)  # ONE commit, 4 files
 
     def _drain() -> int:
-        q = (
+        drain(
             spark.readStream.format("delta_stream")
             .option("path", path)
             .option("maxFilesPerTrigger", "2")
@@ -1286,10 +1281,7 @@ def stream_delta_backfill_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             .writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
         return spark.read.parquet(sink).count()
 
     n_head = head.count()

@@ -95,37 +95,3 @@ def get_spark(
         builder = builder.config(k, v)
     return tune(builder.getOrCreate())
 
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def iter_shuffle_throttle(spark: SparkSession, n_rows: int, rows_per_partition: int = 250_000):
-    """Shuffle width for an ITERATIVE kernel's loop, derived from the loop
-    relation's size instead of the session default.
-
-    Per-round joins/aggregates over a small contracted relation (CC star
-    rounds, rank tables, label tables) pay a fixed per-task scheduling and
-    shuffle-bookkeeping cost x shuffle partitions x rounds; at the session
-    width (cores, 32 on the bench box) that floor dominates tiny rounds —
-    measured same-JVM at sf0.1: pagerank 3.54 s -> 1.76 s, star-CC
-    2.85 s -> 2.49 s at width 8. The width is scale-adaptive, never a
-    constant: ceil(n_rows / rows_per_partition) clamped to [8, session
-    width], so a billion-edge loop keeps the session's full width and the
-    local fixture gets the floor. Overridable via
-    $RTCDB_ITER_SHUFFLE_PARTITIONS. The conf is restored on exit; the
-    caller must materialize the loop INSIDE the `with` (per-round
-    signature/convergence actions, or an eager localCheckpoint of the
-    result) for the width to apply to the real execution.
-    """
-    env = os.environ.get("RTCDB_ITER_SHUFFLE_PARTITIONS")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if env:
-        parts = max(1, int(env))
-    else:
-        parts = max(8, min(int(prev), -(-int(n_rows) // rows_per_partition)))
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)

@@ -521,14 +521,10 @@ def stream_ingest_near_dedup_to_versioned(
         )
         seen.add(txn)
 
-    from rtcdb_spark.streaming.events import stream_shuffle_throttle
+    from rtcdb_spark.streaming.events import drain
 
-    with stream_shuffle_throttle(docs.sparkSession):
-        q = (
-            flags.writeStream.foreachBatch(_commit_batch)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        flags.writeStream.foreachBatch(_commit_batch)
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+    )

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rtcdb_spark.deterministic import dsum
-from rtcdb_spark.streaming.events import stream_shuffle_throttle
+from rtcdb_spark.streaming.events import drain
 
 
 def _restore_if_interrupted(out_dir: str) -> None:
@@ -91,18 +91,14 @@ def stream_to_parquet(
     """Stateless filter+project streamed to an append-mode parquet sink,
     exactly-once under restart (checkpoint + `_spark_metadata` commit log).
     Runs to completion over available input (`availableNow`)."""
-    with stream_shuffle_throttle(events.sparkSession):
-        q = (
-            events.filter(F.col("value") >= F.lit(min_value))
-            .select("event_id", "ts", "user_id", "event_type", "value")
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        events.filter(F.col("value") >= F.lit(min_value))
+        .select("event_id", "ts", "user_id", "event_type", "value")
+        .writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+    )
 
 
 def stream_agg_foreach_batch(
@@ -138,15 +134,11 @@ def stream_agg_foreach_batch(
             ).unionByName(batch_df)
         _swap_in(merged, out_dir)
 
-    with stream_shuffle_throttle(events.sparkSession):
-        q = (
-            agg.writeStream.foreachBatch(_write_snapshot)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        agg.writeStream.foreachBatch(_write_snapshot)
+        .outputMode("update")
+        .option("checkpointLocation", checkpoint_dir)
+    )
 
 
 def stream_rollup_cascade(
@@ -194,15 +186,11 @@ def stream_rollup_cascade(
             ).agg(F.sum("n_events").alias("n_events"), F.sum("sdec").alias("sdec"))
             _swap_in(rolled, f"{out_dir}/{level}")
 
-    with stream_shuffle_throttle(events.sparkSession):
-        q = (
-            minute.writeStream.foreachBatch(_apply)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        minute.writeStream.foreachBatch(_apply)
+        .outputMode("update")
+        .option("checkpointLocation", checkpoint_dir)
+    )
 
 
 def stream_to_versioned(
@@ -313,16 +301,12 @@ def stream_to_versioned(
                 zorder_by=autocompact_zorder_by,
             )
 
-    with stream_shuffle_throttle(events.sparkSession):
-        q = (
-            events.select("event_id", "ts", "user_id", "event_type", "value")
-            .writeStream.foreachBatch(_commit_batch)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        events.select("event_id", "ts", "user_id", "event_type", "value")
+        .writeStream.foreachBatch(_commit_batch)
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+    )
 
 
 def stream_cdc_upsert(
@@ -368,16 +352,12 @@ def stream_cdc_upsert(
         )
         _swap_in(merged, out_dir)
 
-    with stream_shuffle_throttle(events.sparkSession):
-        q = (
-            events.select(*cols)
-            .writeStream.foreachBatch(_apply)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        events.select(*cols)
+        .writeStream.foreachBatch(_apply)
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+    )
 
 
 def stream_to_rtcdb(
@@ -414,15 +394,11 @@ def stream_to_rtcdb(
         )
         write_rtcdb(cols, root, table)
 
-    with stream_shuffle_throttle(events.sparkSession):
-        q = (
-            events.writeStream.foreachBatch(_append)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        events.writeStream.foreachBatch(_append)
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+    )
 
 
 def stream_cdc_with_tombstones(
@@ -466,16 +442,12 @@ def stream_cdc_with_tombstones(
             )
         _swap_in(merged, out_dir)
 
-    with stream_shuffle_throttle(events.sparkSession):
-        q = (
-            events.select(*cols)
-            .writeStream.foreachBatch(_apply)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        events.select(*cols)
+        .writeStream.foreachBatch(_apply)
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+    )
 
 
 def read_cdc_snapshot(spark, out_dir: str) -> DataFrame:
@@ -544,12 +516,8 @@ def stream_to_delta(
             dl.write_delta(batch_df, table_path, extra_actions=[txn])
         hw[0] = batch_id
 
-    with stream_shuffle_throttle(events.sparkSession):
-        q = (
-            events.writeStream.foreachBatch(_commit_batch)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        events.writeStream.foreachBatch(_commit_batch)
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+    )

@@ -5,12 +5,9 @@ optimization round.
   parity) and zero-row batches return empty instead of raising.
 - hilbert_value: NULL in a clustering column yields NULL d (instead of
   failing the OPTIMIZE job's task).
-- fan_out_small / fan_out_small_ordered: streaming pass-through and the
-  range-partition contract that keeps ordered map-only kernels
-  single-execution.
 - Winnow / codec query plans: the map kernel has NO Exchange above it
-  (a global sort there re-executes the kernel for range sampling), and
-  the fan-out gates no-op on already-parallel input.
+  (a global sort there re-executes the kernel for range sampling). The
+  fan-out contract itself is tested in test_partitioning.py.
 """
 
 import pandas as pd
@@ -101,34 +98,6 @@ def test_hilbert_kernel_masks_nan_inputs():
     out = _hilbert_d_arrays(xs, ys, bits=16)
     assert out[0] is not None and not pd.isna(out[0])
     assert pd.isna(out[1]) and pd.isna(out[2])
-
-
-def test_fan_out_small_streaming_passthrough(spark, tmp_path):
-    from rtcdb_spark.functions.dedup import fan_out_small, fan_out_small_ordered
-
-    sdf = (
-        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-    )
-    assert fan_out_small(sdf) is sdf
-    out, ordered = fan_out_small_ordered(sdf, "value")
-    assert out is sdf and ordered is False
-
-
-def test_fan_out_small_ordered_contract(spark):
-    from rtcdb_spark.functions.dedup import fan_out_small_ordered
-
-    narrow = spark.range(0, 1000).coalesce(1).select(F.col("id").alias("doc_id"))
-    out, ordered = fan_out_small_ordered(narrow, "doc_id")
-    assert ordered is True
-    # range partitioning on doc_id + sortWithinPartitions == global order
-    got = [r.doc_id for r in out.sortWithinPartitions("doc_id").collect()]
-    assert got == list(range(1000))
-    # already-parallel input is untouched (no added exchange)
-    n = spark.sparkContext.defaultParallelism
-    wide = spark.range(0, 1000, numPartitions=n).select(F.col("id").alias("doc_id"))
-    out2, ordered2 = fan_out_small_ordered(wide, "doc_id")
-    assert ordered2 is False
-    assert "Exchange" not in out2._jdf.queryExecution().executedPlan().toString()
 
 
 def _formatted_plan(df) -> str:
